@@ -107,8 +107,6 @@ def _percentiles(lat_ms: list[float]) -> dict:
     }
 
 
-STREAM_SHUFFLE = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "8")
-
 # RocksDB + changelog checkpointing: measured r9 on the pattern twin
 # (p50 916 → 777 ms, the changelog skips the per-batch full-snapshot
 # upload) and the dedup twin (sustained 3.2K → 3.5K eps, drain 2.7 → 1.6 s
@@ -128,44 +126,23 @@ def _drive(
 ) -> dict:
     """Start the query, run the producer to completion, drain, stop.
     Returns wall-clock accounting; alert latencies land via sink_fn.
-    `conf` entries (e.g. state-store provider, shuffle partitions) are
-    pinned at query start via the session conf and restored after — a
-    streaming query captures them at start."""
-    # Stateful micro-batches pay a fixed per-partition cost (task launch +
-    # Python state-worker round-trip) EVERY batch; at the bench's key
-    # cardinality 8 state partitions beat the batch suite's 32 by ~4× on
-    # batch wall time (the group-heavy dedup scenario overrides to 32).
-    # Pinned at first start via the query's own conf; restored after — the
-    # batch suite keeps its 32.
+    `conf` entries (e.g. the state-store provider) join the stream's own
+    query confs; streaming.start_query applies them, and the state
+    partition count, at query start."""
+    from types import SimpleNamespace
+
+    from varpulis_spark.streaming import start_query
+
     producer.write_warmup()
     # ops attach their own query confs to the Stream (e.g. the RocksDB
-    # provider a TWS op needs — trend's auto engine resolves to tws since
-    # r12); honor them like streaming.start_query does
-    pinned = {
-        "spark.sql.shuffle.partitions": STREAM_SHUFFLE,
-        **(getattr(stream, "session_confs", None) or {}),
-        **(conf or {}),
-    }
-    saved: dict = {}
-    for k, v in pinned.items():
-        try:
-            saved[k] = spark.conf.get(k)
-        except Exception:
-            saved[k] = None
-        spark.conf.set(k, v)
-    try:
-        q = (
-            stream.df.writeStream.outputMode("append")
-            .option("checkpointLocation", checkpoint)
-            .foreachBatch(sink_fn)
-            .start()
-        )
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+    # provider a TWS op needs)
+    confs = {**(getattr(stream, "session_confs", None) or {}), **(conf or {})}
+    q = start_query(
+        stream.df.writeStream.outputMode("append")
+        .option("checkpointLocation", checkpoint)
+        .foreachBatch(sink_fn),
+        SimpleNamespace(df=stream.df, session_confs=confs),
+    )
     # warmup: the FIRST micro-batch pays one-time costs (query planning,
     # state-store init, Python worker spin-up — measured ~7 s) that would
     # otherwise queue the whole run behind it. Feed one warmup tick
@@ -500,14 +477,12 @@ def bench_dedup_history(spark, workdir: str, docs_per_tick: int = 2048) -> dict:
         # r10, measured at 4K offered with 32 state SHARDS (so total state
         # is 32 keys): HDFSBacked + 8 partitions beats RocksDB + 32 (3638
         # vs 3577 eps, p50 2.33 vs 2.62 s) — with sharded state the
-        # thousands-of-groups rationale for 32 partitions is gone, and the
-        # per-partition store-commit floor dominates instead. The sig UDF
-        # keeps 32-way parallelism via spread() regardless.
+        # per-partition store-commit floor dominates. The sig UDF keeps
+        # 32-way parallelism via spread() regardless.
         conf={
             "spark.sql.streaming.stateStore.providerClass":
                 "org.apache.spark.sql.execution.streaming.state."
                 "HDFSBackedStateStoreProvider",
-            "spark.sql.shuffle.partitions": "8",
         },
     )
     return _finish(acct, producer, lat_ms, alerts[0])

@@ -161,3 +161,78 @@ def test_checkpoint_restart_stream_stream_join(spark, sf_dir, tmp_path):
     assert want, "fixture produced no view-click pairs"
     assert len(got) == len(set(got)), "duplicate pairs across restart"
     assert set(got) == want, "join state lost or corrupted across restart"
+
+
+def test_pattern_restart_keeps_checkpointed_state_partitions(spark, sf_dir, tmp_path):
+    """A pattern checkpoint made with 8 state partitions (the count before
+    streaming.start_query set min(task slots, 8)) restarts under the new
+    rule: Spark keeps the count recorded in the checkpoint, and the rows
+    across the restart equal an uninterrupted run's."""
+    from varpulis_spark.operators.sase import Pattern, step
+
+    base = Stream.events(spark, sf_dir).df.orderBy("ts", "event_id")
+    rows = base.collect()
+    half = len(rows) // 2
+    src_dir = str(tmp_path / "src")
+    os.makedirs(src_dir)
+
+    def write_file(part, name, stamp):
+        tmp = str(tmp_path / name)
+        spark.createDataFrame(part, base.schema).coalesce(1).write.parquet(tmp)
+        (f,) = [f for f in os.listdir(tmp) if f.endswith(".parquet")]
+        dst = os.path.join(src_dir, f"{name}.parquet")
+        shutil.copy(os.path.join(tmp, f), dst)
+        os.utime(dst, (stamp, stamp))
+
+    pattern = Pattern(
+        steps=[step("signup", "a"), step("purchase", "b")],
+        within="6h",
+        emit={"user_id": ("a", "user_id"), "a_id": ("a", "event_id"),
+              "b_id": ("b", "event_id")},
+        partition_by=["user_id"],
+    )
+
+    def writer(ckpt, got):
+        src = S.file_source(spark, src_dir, base.schema,
+                            max_files_per_trigger=1, order_col="event_id")
+        out = S.apply_pattern_streaming(src, pattern)
+
+        def sink(df, _epoch):
+            got.extend(tuple(r) for r in df.select("user_id", "a_id", "b_id").collect())
+
+        return out, (out.df.writeStream.foreachBatch(sink)
+                     .option("checkpointLocation", ckpt))
+
+    def drain(q):
+        q.processAllAvailable()
+        parts = {o["numShufflePartitions"]
+                 for p in q.recentProgress for o in p["stateOperators"]}
+        q.stop()
+        q.awaitTermination(60)
+        return parts
+
+    # phase 1 under the old fixed count of 8, started without start_query
+    write_file(rows[:half], "p0", 1_700_000_000)
+    restarted: list = []
+    ckpt = str(tmp_path / "ckpt")
+    _, w = writer(ckpt, restarted)
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    try:
+        q = w.start()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    assert drain(q) == {8}
+
+    # phase 2: restart through start_query, which asks for min(slots, 8)
+    write_file(rows[half:], "p1", 1_700_000_001)
+    out, w = writer(ckpt, restarted)
+    assert drain(S.start_query(w, out)) == {8}
+
+    whole: list = []
+    out, w = writer(str(tmp_path / "ckpt_whole"), whole)
+    assert drain(S.start_query(w, out)) == {
+        min(spark.sparkContext.defaultParallelism, 8)}
+    assert len(whole) > 0
+    assert len(restarted) == len(set(restarted))  # no duplicate across restart
+    assert sorted(restarted) == sorted(whole)

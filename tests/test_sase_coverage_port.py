@@ -430,13 +430,14 @@ def test_engine_with_strategy_skip_till_next_match():
 def test_engine_max_runs_limit():
     """rs:1247-1265 with_max_runs(3) + drop: the 4th anchor is dropped —
     driven through the streaming BP-01 merge where the cap lives."""
+    from varpulis_spark.operators.sase import _event_columns
     from varpulis_spark.streaming import _merge_with_run_cap
 
     p = Pattern(steps=[step("A", "a"), step("B", "b")], emit={},
                 max_runs=3, backpressure="drop")
-    anchors = [dict(ev(i, "A", i)) for i in range(4)]
-    events, started, dropped, evicted = _merge_with_run_cap([], anchors, p, None)
-    kept = [e for e in events if e["event_type"] == "A"]
+    anchors = _event_columns([ev(i, "A", i) for i in range(4)])
+    events, started, dropped, evicted = _merge_with_run_cap({}, anchors, p)
+    kept = [t for t in events["event_type"] if t == "A"]
     assert len(kept) == 3 and started == 3 and dropped == 1 and evicted == 0
 
 

@@ -111,7 +111,8 @@ def test_kleene_matches_brute_force(types):
 
 
 # ---------------------------------------------------------------------------
-# BP-01 run-cap merge properties (streaming.py:_merge_with_run_cap)
+# BP-01 run-cap merge properties (streaming.py:_merge_with_run_cap, columnar
+# buffers)
 # ---------------------------------------------------------------------------
 
 
@@ -139,6 +140,7 @@ def test_run_cap_invariants(seq, max_runs, strategy):
     """Whatever the strategy: anchors never exceed max_runs; no buffered
     event predates the oldest surviving anchor; counters reconcile with
     arrivals; the buffer stays ts-sorted."""
+    from varpulis_spark.operators.sase import _event_columns
     from varpulis_spark.streaming import _merge_with_run_cap
 
     ts = 0
@@ -147,21 +149,23 @@ def test_run_cap_invariants(seq, max_runs, strategy):
         ts += gap
         events.append({"event_type": et, "__ts": ts})
     p = _cap_pat(max_runs, strategy)
-    out, started, dropped, evicted = _merge_with_run_cap([], events, p, "k")
+    out, started, dropped, evicted = _merge_with_run_cap(
+        {}, _event_columns(events), p)
+    out_ts = list(out["__ts"]) if out else []
 
-    anchors = [e for e in out if e["event_type"] == "A"]
+    anchors = [t for t, et in zip(out_ts, out.get("event_type", [])) if et == "A"]
     n_arrived = sum(1 for e in events if e["event_type"] == "A")
     assert len(anchors) <= max_runs
     assert started - evicted == len(anchors)
     assert started + dropped == n_arrived
     if anchors:
-        low = min(a["__ts"] for a in anchors)
-        assert all(e["__ts"] >= low for e in out)
+        low = min(anchors)
+        assert all(t >= low for t in out_ts)
     else:
         # no surviving anchors → no match can ever form from survivors…
         # …but non-anchor events only prune against an anchor floor
         pass
-    assert [e["__ts"] for e in out] == sorted(e["__ts"] for e in out)
+    assert out_ts == sorted(out_ts)
 
 
 @given(seq=_evt_seq, max_runs=st.integers(1, 8),
@@ -175,6 +179,7 @@ def test_run_cap_chunked_replay_equals_one_shot(seq, max_runs, splits, strategy)
     keeps checkpoint-restart deterministic. (evict_least_progress is
     excluded by design: its victim choice depends on next-step candidates
     seen SO FAR, so later knowledge can change it.)"""
+    from varpulis_spark.operators.sase import _event_columns
     from varpulis_spark.streaming import _merge_with_run_cap
 
     ts = 0
@@ -184,17 +189,17 @@ def test_run_cap_chunked_replay_equals_one_shot(seq, max_runs, splits, strategy)
         events.append({"event_type": et, "__ts": ts})
     p = _cap_pat(max_runs, strategy)
 
-    one, s1, d1, e1 = _merge_with_run_cap([], list(events), p, "k")
+    one, s1, d1, e1 = _merge_with_run_cap({}, _event_columns(events), p)
 
     cuts = sorted({min(s, len(events)) for s in splits})
     chunks, prev = [], 0
     for c in cuts + [len(events)]:
         chunks.append(events[prev:c])
         prev = c
-    buf, ts_, ds_, es_ = [], 0, 0, 0
+    buf, ts_, ds_, es_ = {}, 0, 0, 0
     for ch in chunks:
-        buf, s, d, e = _merge_with_run_cap(buf, [dict(x) for x in ch], p, "k",
+        buf, s, d, e = _merge_with_run_cap(buf, _event_columns(ch), p, None,
                                            ts_, ds_, es_)
         ts_ += s; ds_ += d; es_ += e
-    assert [x["__ts"] for x in buf] == [x["__ts"] for x in one]
+    assert list(buf.get("__ts", [])) == list(one.get("__ts", []))
     assert (ts_, ds_, es_) == (s1, d1, e1)

@@ -1569,10 +1569,13 @@ def test_mixed_batch_stream_three_way_join(spark, sf_dir, replay_dir):
 
 
 def _sg(n, typ="signup", t0=0, step_ns=1_000_000_000):
-    return [
+    """n events of one type as a columnar run-cap buffer."""
+    from varpulis_spark.operators.sase import _event_columns
+
+    return _event_columns([
         {"event_type": typ, "user_id": "hot", "value": i, "__ts": t0 + i * step_ns}
         for i in range(n)
-    ]
+    ])
 
 
 def _cap_pattern(**kw):
@@ -1591,52 +1594,53 @@ def test_run_cap_drop_bounds_never_completing_hot_key():
     from varpulis_spark.streaming import _merge_with_run_cap
 
     p = _cap_pattern(max_runs=50, backpressure="drop")
-    events, started, dropped, evicted = _merge_with_run_cap([], _sg(1000), p, "hot")
-    assert len(events) == 50 and started == 50
+    events, started, dropped, evicted = _merge_with_run_cap({}, _sg(1000), p)
+    assert len(events["__ts"]) == 50 and started == 50
     assert dropped == 950 and evicted == 0
     # incremental batches against carried state stay bounded
-    ev2, s2, d2, e2 = _merge_with_run_cap(events, _sg(500, t0=10**13), p, "hot")
-    assert len(ev2) == 50 and s2 == 0 and d2 == 500 and e2 == 0
+    ev2, s2, d2, e2 = _merge_with_run_cap(events, _sg(500, t0=10**13), p)
+    assert len(ev2["__ts"]) == 50 and s2 == 0 and d2 == 500 and e2 == 0
 
 
 def test_run_cap_evict_oldest_keeps_newest_runs():
     from varpulis_spark.streaming import _merge_with_run_cap
 
     p = _cap_pattern(max_runs=10, backpressure="evict_oldest")
-    events, started, dropped, evicted = _merge_with_run_cap([], _sg(100), p, "hot")
-    assert len(events) == 10 and started == 100
+    events, started, dropped, evicted = _merge_with_run_cap({}, _sg(100), p)
+    assert len(events["__ts"]) == 10 and started == 100
     assert evicted == 90 and dropped == 0
-    assert [e["value"] for e in events] == list(range(90, 100))
+    assert list(events["value"]) == list(range(90, 100))
 
 
 def test_run_cap_prunes_extenders_behind_oldest_anchor():
     """Non-anchor events older than the oldest surviving anchor are dead
     state (every match starts at an anchor and binds later events) and are
     pruned with it."""
-    from varpulis_spark.streaming import _merge_with_run_cap
+    from varpulis_spark.streaming import _concat, _merge_with_run_cap
 
     p = _cap_pattern(max_runs=5, backpressure="evict_oldest")
     old_purchases = _sg(10, typ="purchase", t0=0)
     signups = _sg(50, t0=10**12)
-    events, *_ = _merge_with_run_cap([], old_purchases + signups, p, "hot")
-    assert len(events) == 5
-    assert all(e["event_type"] == "signup" for e in events)
+    events, *_ = _merge_with_run_cap({}, _concat(old_purchases, signups), p)
+    assert len(events["__ts"]) == 5
+    assert all(t == "signup" for t in events["event_type"])
 
 
 def test_run_cap_evict_least_progress_picks_stalled_run():
     """EvictLeastProgress (sase.rs:2460): the anchor with no next-step
     candidate after it goes first."""
-    from varpulis_spark.streaming import _merge_with_run_cap
+    from varpulis_spark.streaming import _concat, _merge_with_run_cap
 
     p = _cap_pattern(max_runs=3, backpressure="evict_least_progress")
-    s0, s10, s20 = _sg(1, t0=0)[0], _sg(1, t0=10)[0], _sg(1, t0=20)[0]
-    pur15 = _sg(1, typ="purchase", t0=15)[0]
-    events, *_ = _merge_with_run_cap([], [s0, s10, s20, pur15], p, "hot")
-    assert len(events) == 4  # 3 anchors at cap + 1 extender
-    s30 = _sg(1, t0=30)[0]
-    events2, started, dropped, evicted = _merge_with_run_cap(events, [s30], p, "hot")
+    s0, s10, s20 = _sg(1, t0=0), _sg(1, t0=10), _sg(1, t0=20)
+    pur15 = _sg(1, typ="purchase", t0=15)
+    new = _concat(_concat(s0, s10), _concat(s20, pur15))
+    events, *_ = _merge_with_run_cap({}, new, p)
+    assert len(events["__ts"]) == 4  # 3 anchors at cap + 1 extender
+    s30 = _sg(1, t0=30)
+    events2, started, dropped, evicted = _merge_with_run_cap(events, s30, p)
     assert evicted == 1
-    got = {(e["event_type"], e["__ts"]) for e in events2}
+    got = set(zip(events2["event_type"], events2["__ts"].tolist()))
     # s20 had zero next-step candidates after it → evicted; s0/s10 keep
     # their purchase@15 candidate
     assert got == {("signup", 0), ("signup", 10), ("purchase", 15), ("signup", 30)}
@@ -1646,8 +1650,8 @@ def test_run_cap_sample_rate_zero_drops_all_over_cap():
     from varpulis_spark.streaming import _merge_with_run_cap
 
     p = _cap_pattern(max_runs=10, backpressure="sample:0.0")
-    events, started, dropped, evicted = _merge_with_run_cap([], _sg(100), p, "hot")
-    assert len(events) == 10 and dropped == 90 and evicted == 0
+    events, started, dropped, evicted = _merge_with_run_cap({}, _sg(100), p)
+    assert len(events["__ts"]) == 10 and dropped == 90 and evicted == 0
 
 
 def test_run_cap_sample_counter_rule_holds_rate():
@@ -1657,13 +1661,97 @@ def test_run_cap_sample_counter_rule_holds_rate():
     from varpulis_spark.streaming import _merge_with_run_cap
 
     p = _cap_pattern(max_runs=10, backpressure="sample:0.5")
-    events, started, dropped, evicted = _merge_with_run_cap([], _sg(1010), p, "hot")
-    assert len(events) == 10
+    events, started, dropped, evicted = _merge_with_run_cap({}, _sg(1010), p)
+    assert len(events["__ts"]) == 10
     over_cap = 1000
     accepted_over_cap = started - 10
     assert accepted_over_cap == evicted  # each sampled-in run evicts one
     assert abs(accepted_over_cap / over_cap - 0.5) < 0.05
     assert accepted_over_cap + dropped == over_cap
+
+
+def _spool_batches(spark, tmp_path, batches, schema):
+    """One parquet file per batch in a fresh source dir, modification
+    times in batch order (maxFilesPerTrigger=1 replays them one per
+    micro-batch); returns the dir."""
+    src_dir = os.path.join(str(tmp_path), "src")
+    os.makedirs(src_dir)
+    for i, rows in enumerate(batches):
+        tmp = os.path.join(str(tmp_path), f"b{i}")
+        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(tmp)
+        (part,) = [f for f in os.listdir(tmp) if f.endswith(".parquet")]
+        dst = os.path.join(src_dir, f"b{i}.parquet")
+        shutil.copy(os.path.join(tmp, part), dst)
+        os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
+    return src_dir
+
+
+def test_streaming_pattern_tie_order_across_batches_matches_batch(spark, tmp_path):
+    """Buffered and new events merge in (ts, order_col) order, the batch
+    NFA's order. A buffered signup (ts=5, id=10) must not pair with a
+    purchase (ts=5, id=3) from the next micro-batch: batch orders the
+    purchase first and emits nothing for that key."""
+    from datetime import datetime, timedelta
+
+    t = lambda sec: datetime(2024, 1, 1) + timedelta(seconds=sec)  # noqa: E731
+    schema = "event_id long, ts timestamp, user_id long, event_type string"
+    src_dir = _spool_batches(spark, tmp_path, [
+        [(10, t(5), 1, "signup"), (1, t(1), 2, "signup")],
+        [(3, t(5), 1, "purchase"), (2, t(2), 2, "purchase")],
+    ], schema)
+    p = Pattern(
+        steps=[step("signup", "a"), step("purchase", "b")],
+        emit={"user_id": ("a", "user_id"), "a_id": ("a", "event_id"),
+              "b_id": ("b", "event_id")},
+        partition_by=["user_id"], force_nfa=True,
+    )
+    src = S.file_source(spark, src_dir, spark.read.parquet(src_dir).schema,
+                        max_files_per_trigger=1, order_col="event_id")
+    S.run_to_memory(S.apply_pattern_streaming(src, p), "tie_order")
+    got = {tuple(r) for r in spark.sql(
+        "SELECT user_id, a_id, b_id FROM tie_order").collect()}
+    batch = Stream(spark.read.parquet(src_dir), ts_col="ts", order_col="event_id")
+    exp = {tuple(r) for r in batch.pattern(p).df.select(
+        "user_id", "a_id", "b_id").collect()}
+    assert exp == {(2, 1, 2)}
+    assert got == exp
+
+
+def test_pattern_state_loads_pre_columnar_buffer():
+    """Checkpoints written before the columnar buffer hold a pickled list
+    of per-event dicts, sorted by `__ts` alone. They load as columns in
+    (ts, order_col) order and match exactly like a fresh buffer."""
+    import pickle
+
+    import numpy as np
+    import pandas as pd
+
+    from varpulis_spark.operators.sase import _run_nfa
+    from varpulis_spark.streaming import _load_buffer, _merge_with_run_cap
+
+    pdf = pd.DataFrame({
+        "event_id": [10, 3, 4],
+        "ts": pd.to_datetime(["2024-01-01 00:00:05"] * 2 + ["2024-01-01 00:00:07"]),
+        "user_id": [1, 1, 1],
+        "event_type": ["signup", "purchase", "purchase"],
+    })
+    # the old pattern state: sorted by ts only (id 10 before id 3),
+    # to_dict("records") rows plus int `__ts`
+    old = pdf.sort_values("ts", kind="mergesort").to_dict("records")
+    for e in old:
+        e["__ts"] = int(e["ts"].value)
+    buf = _load_buffer(pickle.dumps(old), "event_id")
+    assert list(buf["event_id"]) == [3, 10, 4]
+    assert buf["__ts"].dtype == np.int64
+    assert _load_buffer(pickle.dumps([]), "event_id") == {}
+
+    fresh = {c: pdf[c].to_numpy() for c in pdf.columns}
+    fresh["__ts"] = pdf["ts"].astype("int64").to_numpy()
+    merged, *_ = _merge_with_run_cap({}, fresh, _cap_pattern(), "event_id")
+    p = Pattern(steps=[step("signup", "a"), step("purchase", "b")],
+                emit={"a": ("a", "event_id"), "b": ("b", "event_id")})
+    rows = _run_nfa(buf, buf["__ts"], 3, p)
+    assert rows == _run_nfa(merged, merged["__ts"], 3, p) == [{"a": 10, "b": 4}]
 
 
 def test_streaming_run_cap_counters_and_evict_semantics(spark, tmp_path):

@@ -168,30 +168,24 @@ class _IncrementalRunner:
     def _compile_streaming(self, source_text: str, emit_streams: set[str]):
         """run_program over the live spool; returns {stream → streaming df}
         for the emit streams, raising _NotIncremental on any batch
-        lowering. Stateful micro-batches pay per-partition fixed cost every
-        injection; 8 state partitions (not the session's 32) keep the
-        per-injection wall low at control-plane key counts."""
+        lowering. The state partition count is set when each query starts
+        (streaming.start_query)."""
         from varpulis_spark import streaming as S
         from varpulis_spark.vpl.compiler import run_program
 
         src = S.file_source(
             self.spark, self.spool, self._spool_schema(), order_col="event_id"
         )
-        prev = self.spark.conf.get("spark.sql.shuffle.partitions")
-        self.spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
-            results = run_program(source_text, src)
-            out = {}
-            for sname in sorted(emit_streams & set(results)):
-                rdf = results[sname]
-                if not rdf.isStreaming:
-                    raise _NotIncremental(f"stream {sname} lowered to batch")
-                out[sname] = rdf
-            if not out:
-                raise _NotIncremental("no streaming emit streams")
-            return out
-        finally:
-            self.spark.conf.set("spark.sql.shuffle.partitions", prev)
+        results = run_program(source_text, src)
+        out = {}
+        for sname in sorted(emit_streams & set(results)):
+            rdf = results[sname]
+            if not rdf.isStreaming:
+                raise _NotIncremental(f"stream {sname} lowered to batch")
+            out[sname] = rdf
+        if not out:
+            raise _NotIncremental("no streaming emit streams")
+        return out
 
     def __init__(self, spark, source_text: str, prog, emit_streams: set[str]):
         import shutil as _shutil

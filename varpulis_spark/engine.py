@@ -10,6 +10,10 @@ itself. This module owns session defaults that matter at 100 TB:
 - Arrow enabled for the Pandas-UDF paths (SASE layer) with bounded batches.
 - shuffle partitions sized from the local core count; on a real cluster this
   is left to AQE's coalescing (initialPartitionNum high, AQE shrinks).
+  Streaming queries do not use this value: AQE is off for stateful
+  queries, and each state partition costs a fixed store load + commit
+  every micro-batch, so `streaming.start_query` starts every query with
+  min(task slots, 8) partitions — one wave of state tasks.
 """
 
 from __future__ import annotations

@@ -214,7 +214,27 @@ class _EventView:
 
 def _run_nfa(cols: dict, ts: "np.ndarray", n: int, pattern: Pattern) -> list[dict]:
     """Enumerate matches over one key group given column arrays + int64-ns
-    `ts` (sorted ascending, ties already ordered by the caller's sort)."""
+    `ts` (sorted ascending, ties already ordered by the caller's sort).
+
+    AND (any_order) patterns lower HERE to the union of per-permutation
+    sequences, so the streaming NFA path gets the same semantics as batch
+    (r9 bug: apply_pattern_batch permuted externally, the streaming path
+    called the enumerator directly and an AND pattern only matched its
+    declared step order — each event set matches under exactly one
+    ts-ordering, so the union is duplicate-free)."""
+    if pattern.any_order:
+        from dataclasses import replace
+        from itertools import permutations
+
+        if any(s.negated for s in pattern.steps):
+            raise ValueError("any_order with negation is not supported")
+        return [
+            r
+            for perm in permutations(pattern.steps)
+            for r in _run_nfa(
+                cols, ts, n, replace(pattern, steps=list(perm), any_order=False)
+            )
+        ]
     out: list[dict] = []
     steps = pattern.steps
     within = pattern.within_ns()
@@ -671,38 +691,24 @@ def _run_nfa(cols: dict, ts: "np.ndarray", n: int, pattern: Pattern) -> list[dic
     return out
 
 
-def _enumerate_matches(events: list[dict], pattern: Pattern) -> list[dict]:
-    """Compat shim over `_run_nfa` for callers holding per-event dicts
-    (the streaming state path pickles dict events). `events` sorted by
-    (ts, tiebreak); each dict has `__ts` int64 ns.
-
-    AND (any_order) patterns lower HERE to the union of per-permutation
-    sequences, so the streaming NFA path gets the same semantics as
-    batch (r9 bug: apply_pattern_batch permuted externally, the streaming
-    path called this enumerator directly and an AND pattern only matched
-    its declared step order — each event set matches under exactly one
-    ts-ordering, so the union is duplicate-free)."""
+def _event_columns(events: list[dict]) -> dict:
+    """Column arrays (plus int64 `__ts`) of per-event dicts that each carry
+    `__ts` int64 ns — the form `_run_nfa` takes."""
     if not events:
-        return []
-    if pattern.any_order:
-        from dataclasses import replace as _dc_replace
-        from itertools import permutations as _perms
-
-        if any(s.negated for s in pattern.steps):
-            raise ValueError("any_order with negation is not supported")
-        out: list[dict] = []
-        for perm in _perms(pattern.steps):
-            out.extend(
-                _enumerate_matches(
-                    events,
-                    _dc_replace(pattern, steps=list(perm), any_order=False),
-                )
-            )
-        return out
+        return {}
     pdf = pd.DataFrame(events)
     cols = {c: pdf[c].to_numpy() for c in pdf.columns}
-    ts = np.asarray(cols["__ts"], dtype=np.int64)
-    return _run_nfa(cols, ts, len(pdf), pattern)
+    cols["__ts"] = cols["__ts"].astype(np.int64)
+    return cols
+
+
+def _enumerate_matches(events: list[dict], pattern: Pattern) -> list[dict]:
+    """Dict-facing entry to `_run_nfa`: `events` sorted by (ts, tiebreak),
+    each dict with `__ts` int64 ns."""
+    cols = _event_columns(events)
+    if not cols:
+        return []
+    return _run_nfa(cols, cols["__ts"], len(events), pattern)
 
 
 # ---------------------------------------------------------------------------

@@ -43,6 +43,7 @@ import os
 import threading
 from typing import Callable
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -61,8 +62,8 @@ _TWS_CONFS = {
 
 # start_query's set→start→restore on the shared session conf is a critical
 # section: PipelineServer starts/hot-reloads queries from HTTP handler
-# threads, and two interleaved starts could capture each other's provider
-# conf (ADVICE r11). One lock per process is enough — a SparkSession is
+# threads, and two interleaved starts could capture each other's confs
+# (ADVICE r11). One lock per process is enough — a SparkSession is
 # process-wide here and the window is a few ms around .start().
 _START_LOCK = threading.Lock()
 
@@ -177,15 +178,18 @@ def kafka_source(
 
 
 def start_query(writer, stream: Stream | None = None, df=None):
-    """Start a streaming query with any per-query SQL confs the pipeline
-    requires (Stream.session_confs / df._varpulis_session_confs — e.g. the
-    RocksDB state-store provider for transformWithStateInPandas ops).
+    """Start a streaming query with its query-scoped SQL confs: the state
+    partition count plus any confs the pipeline requires
+    (Stream.session_confs / df._varpulis_session_confs — e.g. the RocksDB
+    state-store provider for transformWithStateInPandas ops).
 
-    Spark reads the provider conf from a clone of the session conf taken
-    SYNCHRONOUSLY inside .start(), so set→start→restore scopes the conf to
-    this one query: concurrent queries and later restarts from HDFS-backed
-    checkpoints in the same session are untouched (ADVICE r10, verified
-    empirically — a writeStream .option() is NOT honored for this conf)."""
+    Spark reads these confs from a clone of the session conf taken
+    SYNCHRONOUSLY inside .start(), so set→start→restore scopes them to
+    this one query: concurrent queries and the batch suite are untouched
+    (ADVICE r10, verified empirically — a writeStream .option() is NOT
+    honored for these confs). A restart from a checkpoint keeps the
+    partition count recorded in it: Spark overrides the session value
+    with the checkpoint's offset-log conf."""
     confs: dict[str, str] = {}
     if stream is not None:
         # duck-typed streams (tests wrap bare DataFrames) may lack the attr
@@ -200,9 +204,15 @@ def start_query(writer, stream: Stream | None = None, df=None):
             # the stamp was lost somewhere between the TWS op and here
             # (re-wrap / transformation) — the plan is the ground truth
             confs.update(_TWS_CONFS)
-    if not confs:
-        return writer.start()
-    spark = df.sparkSession
+    spark = df.sparkSession if df is not None else SparkSession.active()
+    # one wave of state tasks: every stateful micro-batch pays a fixed cost
+    # per state task (store load + commit, ~250 ms each on a 2-slot host),
+    # so tasks beyond the slots only add waves; past 8 the per-task floor
+    # outweighs the parallelism even on 32 slots (PERF_NOTES "Streaming
+    # state partitions")
+    confs["spark.sql.shuffle.partitions"] = str(
+        min(spark.sparkContext.defaultParallelism, 8)
+    )
     with _START_LOCK:
         saved = {k: spark.conf.get(k, None) for k in confs}
         for k, v in confs.items():
@@ -1696,30 +1706,68 @@ def _run_cap_start_steps(pattern) -> list:
     return starts
 
 
-def _is_run_anchor(e: dict, start_steps: list) -> bool:
+def _nrows(cols: dict) -> int:
+    return len(cols["__ts"]) if cols else 0
+
+
+def _take(cols: dict, idx) -> dict:
+    """Rows of a columnar buffer by mask or index array."""
+    return {c: a[idx] for c, a in cols.items()}
+
+
+def _ts_order(cols: dict, order_col: str | None):
+    """Row permutation sorting a columnar buffer by (ts, order_col) — the
+    batch NFA's arrival order (sase.apply_pattern_batch sort_cols)."""
+    if order_col and order_col in cols:
+        return np.lexsort((cols[order_col], cols["__ts"]))
+    return np.argsort(cols["__ts"], kind="stable")
+
+
+def _concat(a: dict, b: dict) -> dict:
+    if not a:
+        return b
+    if not b:
+        return a
+    return {c: np.concatenate([a[c], b[c]]) for c in a}
+
+
+def _anchor_mask(cols: dict, start_steps: list) -> "np.ndarray":
+    """Which buffered events can open a run (see _run_cap_start_steps)."""
+    from varpulis_spark.operators.sase import _EventView
+
+    n = _nrows(cols)
+    et = cols.get("event_type")
+    mask = np.zeros(n, dtype=bool)
     for s in start_steps:
-        if s.event_type is not None and e.get("event_type") != s.event_type:
-            continue
+        if s.event_type is None:
+            m = np.ones(n, dtype=bool)
+        elif et is None:
+            continue  # typed step, untyped events
+        else:
+            m = np.asarray(et == s.event_type, dtype=bool)
         if s.where is not None and not s.deferred:
-            try:
-                if not s.where(e, {}):
-                    continue
-            except Exception:
-                pass  # binding-dependent predicate → cannot pre-filter here
-        return True
-    return False
+            for i in np.flatnonzero(m & ~mask):
+                try:
+                    if not s.where(_EventView(cols, i), {}):
+                        m[i] = False
+                except Exception:
+                    pass  # binding-dependent predicate → cannot pre-filter here
+        mask |= m
+    return mask
 
 
-def _merge_with_run_cap(old_events: list, new_events: list, pattern,
-                        key, started_total: int = 0, dropped_total: int = 0,
-                        evicted_total: int = 0) -> tuple[list, int, int, int]:
+def _merge_with_run_cap(old: dict, new: dict, pattern, order_col: str | None = None,
+                        started_total: int = 0, dropped_total: int = 0,
+                        evicted_total: int = 0) -> tuple[dict, int, int, int]:
     """Merge new events into the buffered state under the per-key run cap
-    (BP-01, sase.rs:2505-2560 handle_backpressure_partitioned). Events that
-    cannot open a run always buffer (they only ever EXTEND runs; the
-    reference caps runs, not events — their retention is bounded below by
-    pruning past the oldest surviving anchor). Returns
-    (events_sorted, started, dropped, evicted)."""
-    start_steps = _run_cap_start_steps(pattern)
+    (BP-01, sase.rs:2505-2560 handle_backpressure_partitioned). Both
+    buffers are columnar (column arrays plus int64 `__ts`, `old` already
+    sorted); new events arrive in (ts, order_col) order, the batch NFA's
+    arrival order. Events that cannot open a run always buffer (they only
+    ever EXTEND runs; the reference caps runs, not events — their
+    retention is bounded below by pruning past the oldest surviving
+    anchor). Returns (buffer sorted by (ts, order_col), started, dropped,
+    evicted)."""
     max_runs = pattern.max_runs
     strategy = pattern.backpressure
     sample_rate = None
@@ -1727,97 +1775,97 @@ def _merge_with_run_cap(old_events: list, new_events: list, pattern,
         sample_rate = float(strategy.split(":", 1)[1])
         strategy = "sample"
 
-    anchors = [e for e in old_events if _is_run_anchor(e, start_steps)]
-    events = list(old_events)
+    n_old = _nrows(old)
+    if new:
+        new = _take(new, _ts_order(new, order_col))
+    cols = _concat(old, new)
+    n = _nrows(cols)
+    if not n:
+        return cols, 0, 0, 0
+    ts = cols["__ts"]
+    anchor = _anchor_mask(cols, _run_cap_start_steps(pattern))
+    keep = np.ones(n, dtype=bool)
+    new_anchors = np.flatnonzero(anchor[n_old:]) + n_old
+    live = int(anchor[:n_old].sum())
     started = dropped = evicted = 0
 
-    def remove_by_id(lst: list, obj) -> None:
-        # identity-based removal: dict `==` would raise on ndarray-valued
-        # fields (array columns survive to_dict("records") as numpy arrays)
-        for i, x in enumerate(lst):
-            if x is obj:
-                del lst[i]
-                return
+    def oldest(cands):
+        return cands[np.argmin(ts[cands])]
 
-    def progress_of(a: dict, later_ts: dict) -> int:
+    def least_progress(cands, i):
         # EvictLeastProgress analog: count next steps with at least one
-        # candidate event strictly after the anchor (fewest stack entries,
-        # sase.rs:802). later_ts: step event_type -> sorted ts list.
-        import bisect
-        p = 0
-        for tss in later_ts.values():
-            if bisect.bisect_right(tss, a["__ts"]) < len(tss):
-                p += 1
-        return p
+        # buffered candidate strictly after the anchor (fewest stack
+        # entries, sase.rs:802); ties go to the oldest anchor
+        et = cols.get("event_type")
+        later = {s.event_type for s in pattern.steps[1:]
+                 if not s.negated and s.event_type is not None}
+        progress = np.zeros(len(cands), dtype=np.int64)
+        for t in later:
+            tts = ts[:i][keep[:i] & (et[:i] == t)] if et is not None else ts[:0]
+            if len(tts):
+                progress += ts[cands] < tts.max()
+        return cands[np.lexsort((ts[cands], progress))[0]]
 
-    for e in sorted(new_events, key=lambda x: x["__ts"]):
-        if not _is_run_anchor(e, start_steps):
-            events.append(e)
-            continue
-        if len(anchors) < max_runs:
-            anchors.append(e)
-            events.append(e)
+    for i in new_anchors:
+        if live < max_runs:
+            live += 1
             started += 1
             continue
-        if strategy in ("drop", "error") or not anchors:
-            # not anchors ⇔ max_runs <= 0: nothing to evict, every run drops
+        if strategy in ("drop", "error") or live <= 0:
+            # live <= 0 ⇔ max_runs <= 0: nothing to evict, every run drops
+            keep[i] = False
             dropped += 1
-        elif strategy == "sample":
+            continue
+        if strategy == "sample":
             # "accept new runs with probability `rate`" (sase.rs:804-808).
-            # The reference approximates this with a `created*rate > dropped`
-            # counter switch (sase.rs:2476-2479) that degenerates to
-            # all-or-nothing once tripped; we pace deterministically so the
-            # long-run accept fraction of over-cap arrivals IS `rate`
+            # The reference approximates this with a `created*rate >
+            # dropped` counter switch (sase.rs:2476-2479) that degenerates
+            # to all-or-nothing once tripped; we pace deterministically so
+            # the long-run accept fraction of over-cap arrivals IS `rate`
             # (documented divergence — intent over artifact). Over-cap
             # accepts == evictions for this strategy, so the evicted counter
             # is the accept count.
             e_tot = evicted_total + evicted
             d_tot = dropped_total + dropped
-            if e_tot < sample_rate * (e_tot + d_tot + 1):
-                # sampled in: at cap, so make room like EvictOldest
-                victim = min(anchors, key=lambda a: a["__ts"])
-                remove_by_id(anchors, victim)
-                remove_by_id(events, victim)
-                evicted += 1
-                anchors.append(e)
-                events.append(e)
-                started += 1
-            else:
+            if not e_tot < sample_rate * (e_tot + d_tot + 1):
+                keep[i] = False
                 dropped += 1
-        else:  # evict_oldest | evict_least_progress
-            if strategy == "evict_least_progress":
-                later_types = {}
-                for s in pattern.steps[1:]:
-                    if not s.negated and s.event_type is not None:
-                        later_types.setdefault(s.event_type, [])
-                for ev in events:
-                    t = ev.get("event_type")
-                    if t in later_types:
-                        later_types[t].append(ev["__ts"])
-                for tss in later_types.values():
-                    tss.sort()
-                victim = min(
-                    anchors,
-                    key=lambda a: (progress_of(a, later_types), a["__ts"]),
-                )
-            else:
-                victim = min(anchors, key=lambda a: a["__ts"])
-            remove_by_id(anchors, victim)
-            remove_by_id(events, victim)
-            evicted += 1
-            anchors.append(e)
-            events.append(e)
-            started += 1
+                continue
+        # evict_oldest | evict_least_progress | sampled in: make room
+        cands = np.flatnonzero(anchor[:i] & keep[:i])
+        keep[least_progress(cands, i) if strategy == "evict_least_progress"
+             else oldest(cands)] = False
+        evicted += 1
+        started += 1
     # Every match STARTS at an anchor and binds only (ts,order)-later events,
     # so events older than the oldest surviving anchor are dead state — prune
     # them (this is what keeps a hot key bounded under a never-completing
     # pattern even with no `within` horizon). A leading negation would peek
     # before the first positive, so skip pruning in that case.
-    if anchors and not (pattern.steps and pattern.steps[0].negated):
-        low = min(a["__ts"] for a in anchors)
-        events = [e for e in events if e["__ts"] >= low]
-    events.sort(key=lambda e: e["__ts"])
-    return events, started, dropped, evicted
+    alive = anchor & keep
+    if alive.any() and not (pattern.steps and pattern.steps[0].negated):
+        keep &= ts >= ts[alive].min()
+    if not keep.all():
+        cols = _take(cols, keep)
+    if n_old and new:
+        cols = _take(cols, _ts_order(cols, order_col))
+    return cols, started, dropped, evicted
+
+
+def _load_buffer(buf_pkl: bytes, order_col: str | None) -> dict:
+    """Unpickle a pattern key's event buffer. Checkpoints written before
+    the columnar buffer hold a list of per-event dicts sorted by `__ts`
+    alone; they convert on first load and sort by (ts, order_col)."""
+    import pickle
+
+    from varpulis_spark.operators.sase import _event_columns
+
+    buf = pickle.loads(buf_pkl)
+    if isinstance(buf, list):
+        buf = _event_columns(buf)
+        if buf:
+            buf = _take(buf, _ts_order(buf, order_col))
+    return buf
 
 
 def apply_pattern_streaming(
@@ -1857,7 +1905,7 @@ def apply_pattern_streaming(
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     from varpulis_spark.functions import duration_ns
-    from varpulis_spark.operators.sase import _enumerate_matches, _out_schema
+    from varpulis_spark.operators.sase import _out_schema, _run_nfa
 
     # Idle-key GC is opt-in: with a processing-time timeout the engine keeps
     # scheduling no-data batches, so processAllAvailable()-style draining
@@ -1894,7 +1942,7 @@ def apply_pattern_streaming(
 
     out_schema = _out_schema(pattern, df)
     state_schema = "buf binary, emitted binary, started long, dropped long, evicted long"
-    sort_cols = [ts_col] + ([order_col] if order_col else [])
+    emit_cols = list(pattern.emit.keys())
     within = pattern.within_ns()
     in_cols = df.columns
 
@@ -1949,18 +1997,19 @@ def apply_pattern_streaming(
     acc_dropped = sc.accumulator(0)
     acc_evicted = sc.accumulator(0)
 
-    def _advance(key, old_events, emitted, new_events, wm_ns, counters):
+    def _advance(buf, emitted, new, wm_ns, counters):
         """Shared per-invocation core for BOTH stateful engines: merge new
         events under the run cap, re-enumerate, gate trailing-negation
-        confirmation on the watermark, evict beyond the horizon.
+        confirmation on the watermark, evict beyond the horizon. `buf` and
+        `new` are columnar (column arrays plus int64 `__ts`, see
+        _merge_with_run_cap).
 
-        Returns (events, emitted, fresh_rows, pending_min_ns, counters).
+        Returns (buf, emitted, fresh_rows, pending_min_ns, counters).
         pending_min_ns = earliest unconfirmed deadline (the caller arms a
         timer/timeout at it), None when nothing is pending."""
         c_started, c_dropped, c_evicted = counters
-        events, d_started, d_dropped, d_evicted = _merge_with_run_cap(
-            old_events, new_events, pattern, key, c_started, c_dropped,
-            c_evicted,
+        buf, d_started, d_dropped, d_evicted = _merge_with_run_cap(
+            buf, new, pattern, order_col, c_started, c_dropped, c_evicted,
         )
         if d_started:
             acc_started.add(d_started)
@@ -1968,8 +2017,10 @@ def apply_pattern_streaming(
             acc_dropped.add(d_dropped)
         if d_evicted:
             acc_evicted.add(d_evicted)
-        max_ts = events[-1]["__ts"] if events else 0
-        rows = _enumerate_matches(events, id_pattern)
+        n = _nrows(buf)
+        ts = buf["__ts"] if n else None
+        max_ts = int(ts[-1]) if n else 0
+        rows = _run_nfa(buf, ts, n, id_pattern) if n else []
         fresh = []
         pending_min = None
         for r in rows:
@@ -1983,7 +2034,7 @@ def apply_pattern_streaming(
                 if c.startswith("__sig_ts__"):
                     t = min(v) if isinstance(v, (list, tuple)) and v else v
                     try:
-                        # _enumerate_matches hands back numpy int64 — a bare
+                        # _run_nfa hands back numpy int64 — a bare
                         # isinstance(int) silently drops first_ts, which the
                         # confirmation deadline (first_ts + within) must not
                         t = int(t)
@@ -2019,7 +2070,11 @@ def apply_pattern_streaming(
                 low = wm_ns - within
             else:
                 low = (wm_ns if wm_ns > 0 else max_ts) - within
-            events = [e for e in events if e["__ts"] >= low]
+            if n and ts[0] < low:
+                # the buffer is ts-sorted: eviction drops a prefix
+                buf = _take(buf, slice(int(np.searchsorted(ts, low)), None))
+                ts = buf["__ts"]
+                n = len(ts)
             # a match can only be re-enumerated while its FIRST event is
             # still in the buffer — evict signatures in lockstep, so the
             # dedupe set plateaus instead of growing forever
@@ -2027,34 +2082,37 @@ def apply_pattern_streaming(
         # run-cap pruning evicts buffered events too (oldest-anchor rule in
         # _merge_with_run_cap) — keep the dedupe set in lockstep with the
         # buffer floor so it cannot outgrow the bounded state
-        if events:
-            buf_low = events[0]["__ts"]
+        if n:
+            buf_low = int(ts[0])
             emitted = {s: t for s, t in emitted.items() if t >= buf_low}
         new_counters = (
             c_started + d_started, c_dropped + d_dropped,
             c_evicted + d_evicted,
         )
-        return events, emitted, fresh, pending_min, new_counters
+        return buf, emitted, fresh, pending_min, new_counters
 
-    def _chunks_to_events(pdfs) -> list:
-        new_events = []
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            pdf = pdf.sort_values(sort_cols, kind="mergesort")
-            ts_ns = pdf[ts_col].astype("int64").to_numpy()
-            evs = pdf.to_dict("records")
-            for e, t in zip(evs, ts_ns):
-                e["__ts"] = int(t)
-            new_events.extend(evs)
-        return new_events
+    def _chunk_columns(pdfs) -> dict:
+        """The group's new events as one columnar buffer (one concat over
+        Spark's chunks; _merge_with_run_cap sorts it)."""
+        chunks = [p for p in pdfs if len(p)]
+        if not chunks:
+            return {}
+        pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
+        cols = {c: pdf[c].to_numpy() for c in pdf.columns}
+        cols["__ts"] = pdf[ts_col].astype("int64").to_numpy()
+        return cols
 
     if engine == "tws":
         return _apply_pattern_streaming_tws(
             stream, pattern, df, keys, out_schema, in_cols, has_trailing,
-            _advance, _chunks_to_events,
+            _advance, _chunk_columns,
             (acc_started, acc_dropped, acc_evicted),
         )
+
+    def _out(fresh):
+        # Spark skips empty frames: building one per quiet key is wasted work
+        if fresh:
+            yield pd.DataFrame(fresh, columns=emit_cols)
 
     def run(key, pdfs, state: GroupState):
         _dbg = os.environ.get("VARPULIS_PATTERN_DEBUG")
@@ -2071,14 +2129,15 @@ def apply_pattern_streaming(
                 return 0
 
         def _load():
-            if state.exists:
-                buf_pkl, emitted_pkl, cs, cd, ce = state.get
-                return pickle.loads(buf_pkl), pickle.loads(emitted_pkl), (cs, cd, ce)
-            return [], {}, (0, 0, 0)
+            if not state.exists:
+                return {}, {}, (0, 0, 0)
+            buf_pkl, emitted_pkl, cs, cd, ce = state.get
+            return (_load_buffer(buf_pkl, order_col), pickle.loads(emitted_pkl),
+                    (cs, cd, ce))
 
-        def _save(events, emitted, counters, pending_min, wm_ns):
+        def _save(buf, emitted, counters, pending_min, wm_ns):
             state.update((
-                pickle.dumps(events), pickle.dumps(emitted), *counters,
+                pickle.dumps(buf), pickle.dumps(emitted), *counters,
             ))
             if has_trailing and pending_min is not None:
                 # fire once the watermark passes the earliest deadline
@@ -2093,34 +2152,33 @@ def apply_pattern_streaming(
             _log(f"timed out key={key}")
             if not has_trailing:
                 state.remove()  # idle-key GC (processing-time timeout)
-                yield pd.DataFrame(columns=list(pattern.emit.keys()))
                 return
             # confirmation flush: the watermark passed a pending deadline
             # with no new data for this key — re-enumerate and emit what is
             # now confirmed (the hand-rolled analog of a native timer)
-            old_events, emitted, counters = _load()
+            buf, emitted, counters = _load()
             wm_ns = _wm_ns()
-            events, emitted, fresh, pending_min, counters = _advance(
-                key, old_events, emitted, [], wm_ns, counters
+            buf, emitted, fresh, pending_min, counters = _advance(
+                buf, emitted, {}, wm_ns, counters
             )
-            if events or emitted or pending_min is not None:
-                _save(events, emitted, counters, pending_min, wm_ns)
+            if _nrows(buf) or emitted or pending_min is not None:
+                _save(buf, emitted, counters, pending_min, wm_ns)
             else:
                 state.remove()  # fully drained key
-            yield pd.DataFrame(fresh, columns=list(pattern.emit.keys()))
+            yield from _out(fresh)
             return
 
-        old_events, emitted, counters = _load()
+        buf, emitted, counters = _load()
         wm_ns = _wm_ns()
-        events, emitted, fresh, pending_min, counters = _advance(
-            key, old_events, emitted, _chunks_to_events(pdfs), wm_ns, counters
+        buf, emitted, fresh, pending_min, counters = _advance(
+            buf, emitted, _chunk_columns(pdfs), wm_ns, counters
         )
         _log(
-            f"batch key={key} wm_ms={wm_ns//1_000_000} n_events={len(events)} "
+            f"batch key={key} wm_ms={wm_ns//1_000_000} n_events={_nrows(buf)} "
             f"fresh={len(fresh)} pending={pending_min}"
         )
-        _save(events, emitted, counters, pending_min, wm_ns)
-        yield pd.DataFrame(fresh, columns=list(pattern.emit.keys()))
+        _save(buf, emitted, counters, pending_min, wm_ns)
+        yield from _out(fresh)
 
     timeout_conf = (
         GroupStateTimeout.EventTimeTimeout if has_trailing
@@ -2143,7 +2201,7 @@ def apply_pattern_streaming(
 
 def _apply_pattern_streaming_tws(
     stream: Stream, pattern, df, keys, out_schema, in_cols, has_trailing,
-    _advance, _chunks_to_events, accs,
+    _advance, _chunk_columns, accs,
 ):
     """transformWithStateInPandas twin of apply_pattern_streaming — the r11
     timer-driven migration (VERDICT r10 task 4).
@@ -2202,32 +2260,31 @@ def _apply_pattern_streaming_tws(
 
         def _load(self):
             if not self.meta.exists():
-                return [], {}, (0, 0, 0), set()
+                return {}, {}, (0, 0, 0), set()
             emitted_pkl, cs, cd, ce, armed_pkl = self.meta.get()
-            events = self._typed_events(list(self.buf.get()))
-            return events, pickle.loads(emitted_pkl), (cs, cd, ce), pickle.loads(armed_pkl)
+            buf = self._columns(list(self.buf.get()))
+            return buf, pickle.loads(emitted_pkl), (cs, cd, ce), pickle.loads(armed_pkl)
 
-        def _typed_events(self, tuples: list) -> list:
+        def _columns(self, tuples: list) -> dict:
+            """ListState rows → the columnar buffer _advance takes."""
             if not tuples:
-                return []
+                return {}
             pdf = pd.DataFrame(tuples, columns=buf_cols)
             for c, dt in buf_dtypes.items():
                 try:
                     pdf[c] = pdf[c].astype(dt)
                 except (TypeError, ValueError):
                     pass
-            evs = pdf.to_dict("records")
-            for e in evs:
-                e["__ts"] = int(e["__ts"])
-            return evs
+            return {c: pdf[c].to_numpy() for c in buf_cols}
 
-        def _save(self, events, emitted, counters, armed):
+        def _save(self, buf, emitted, counters, armed):
             self.meta.update((pickle.dumps(emitted), *counters, pickle.dumps(armed)))
             self.buf.clear()
-            if events:
-                self.buf.appendList(
-                    [tuple(e.get(c) for c in buf_cols) for e in events]
-                )
+            if _nrows(buf):
+                # Series iteration boxes to Python scalars/Timestamps, which
+                # the ListState row encoder takes
+                pdf = pd.DataFrame({c: buf[c] for c in buf_cols})
+                self.buf.appendList(list(pdf.itertuples(index=False, name=None)))
 
         def _arm(self, pending_min, armed: set, wm_ms: int) -> set:
             armed = {t for t in armed if t > wm_ms}  # fired timers are gone
@@ -2239,30 +2296,30 @@ def _apply_pattern_streaming_tws(
             return armed
 
         def handleInputRows(self, key, rows, timer_values):
-            events, emitted, counters, armed = self._load()
+            buf, emitted, counters, armed = self._load()
             try:
                 wm_ms = timer_values.getCurrentWatermarkInMs()
             except Exception:  # timeMode "None" carries no watermark
                 wm_ms = 0
             wm_ns = max(wm_ms, 0) * 1_000_000
-            events, emitted, fresh, pending_min, counters = _advance(
-                key, events, emitted, _chunks_to_events(rows), wm_ns, counters
+            buf, emitted, fresh, pending_min, counters = _advance(
+                buf, emitted, _chunk_columns(rows), wm_ns, counters
             )
             armed = self._arm(pending_min, armed, wm_ms)
-            self._save(events, emitted, counters, armed)
+            self._save(buf, emitted, counters, armed)
             yield pd.DataFrame(fresh, columns=emit_cols)
 
         def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
             # watermark passed a pending confirmation deadline: re-enumerate
             # with no new events and emit what is now confirmed
-            events, emitted, counters, armed = self._load()
+            buf, emitted, counters, armed = self._load()
             wm_ms = timerValues.getCurrentWatermarkInMs()
-            events, emitted, fresh, pending_min, counters = _advance(
-                key, events, emitted, [], max(wm_ms, 0) * 1_000_000, counters
+            buf, emitted, fresh, pending_min, counters = _advance(
+                buf, emitted, {}, max(wm_ms, 0) * 1_000_000, counters
             )
             armed = self._arm(pending_min, armed, wm_ms)
-            if events or emitted or pending_min is not None:
-                self._save(events, emitted, counters, armed)
+            if _nrows(buf) or emitted or pending_min is not None:
+                self._save(buf, emitted, counters, armed)
             else:
                 self.buf.clear()
                 self.meta.clear()
