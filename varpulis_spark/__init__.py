@@ -11,11 +11,21 @@ with Pandas-UDF stateful processing only for the SASE+ pattern layer that
 Catalyst cannot express.
 """
 
-from varpulis_spark.engine import get_spark, load_table, load_tables
+from varpulis_spark.engine import (
+    get_spark,
+    install_stamped_zip_importers,
+    load_table,
+    load_tables,
+)
 from varpulis_spark.stream import Stream, merge
 from varpulis_spark.schema import EventSchema, SchemaRegistry
 
 __version__ = "0.1.0"
+
+# Every Python worker that unpickles a varpulis UDF imports this package,
+# so from its next task on Spark's per-task importlib.invalidate_caches()
+# stops re-reading unchanged zip archives (see engine.StampedZipImporter).
+install_stamped_zip_importers()
 
 __all__ = [
     "Stream",

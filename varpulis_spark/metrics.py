@@ -64,8 +64,12 @@ def observed(df: DataFrame, name: str = "metrics") -> DataFrame:
 # text format on its metrics port; scrapers consume it directly)
 # ---------------------------------------------------------------------------
 
-# reference histogram buckets (metrics.rs:48-56)
-LATENCY_BUCKETS = [0.0001, 0.0005, 0.001, 0.005, 0.01, 0.05, 0.1, 0.5, 1.0]
+# reference histogram buckets (metrics.rs:48-56), extended to 10 s: a
+# Spark micro-batch takes ~1 s, so with a 1.0 s top bucket most
+# observations landed in +Inf
+LATENCY_BUCKETS = [
+    0.0001, 0.0005, 0.001, 0.005, 0.01, 0.05, 0.1, 0.5, 1.0, 2.5, 5.0, 10.0,
+]
 
 
 class LatencyHistogram:

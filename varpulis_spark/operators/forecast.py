@@ -438,19 +438,16 @@ def forecast(
     # concat at sf1) dominated the wall over the model itself; measured
     # ~4 s → ~2 s at sf1.
     from varpulis_spark.operators.dedup import spread_keys
-    from varpulis_spark.operators.partition_driver import (
-        collect_partition,
-        sorted_key_bounds,
-    )
+    from varpulis_spark.operators.partition_driver import partition_columns
 
     def run_partition(batches):
-        pdf = collect_partition(batches)
-        if pdf is None or pdf.empty:
+        part = partition_columns(batches, keys, sort_cols)
+        if part is None:
             yield pd.DataFrame(columns=out_cols)
             return
-        pdf, bounds = sorted_key_bounds(pdf, keys, sort_cols)
-        ets_all = pdf["event_type"].to_numpy()
-        ts_all = pdf[ts_col].astype("int64").to_numpy()
+        cols, bounds = part
+        ets_all = cols["event_type"]
+        ts_all = cols["__ts"]
         f_i: list[int] = []
         f_first: list[int] = []
         f_meta: list[tuple] = []
@@ -472,14 +469,14 @@ def forecast(
             return
         out = {}
         for k in keys:
-            out[k] = pdf[k].to_numpy()[f_i]
-        out[id_field] = pdf[id_field].to_numpy()[f_i]
+            out[k] = cols[k][f_i]
+        out[id_field] = cols[id_field][f_i]
         if carry_ts:
-            out[ts_col] = pdf[ts_col].to_numpy()[f_i]
+            out[ts_col] = cols[ts_col][f_i]
         for ci, mc in enumerate(meta_cols):
             out[mc] = [t[ci] for t in f_meta]
         for c in in_cols:
-            out[f"__first_{c}"] = pdf[c].to_numpy()[f_first]
+            out[f"__first_{c}"] = cols[c][f_first]
         yield pd.DataFrame(out, columns=out_cols)
 
     return spread_keys(df, keys).mapInPandas(run_partition, schema)

@@ -16,11 +16,12 @@ count, but per-event propagated counts give every aggregate in O(n²):
                     propagated as len_sum[i] = cnt[i] + Σ len_sum[j]
     sum_trends(f) = Σ over trends of Σ f(e), propagated the same way.
 
-Spark lowering: per partition key the DP runs inside `applyInPandas` (the
-same shuffle shape as any keyed aggregation); the event-type prefilter
-pushes into the scan, and the shuffle is pinned at default parallelism
-(spread_keys) so AQE's size-based coalescing can't serialize the CPU-bound
-stage. The DP itself is vectorized:
+Spark lowering: per partition key the DP runs on the key's numpy column
+slices under `partition_driver.apply_per_key` (one keyed shuffle, one sort
+per partition); the event-type prefilter pushes into the scan, and the
+shuffle is pinned at default parallelism (spread_keys) so AQE's size-based
+coalescing can't serialize the CPU-bound stage. The DP itself is
+vectorized:
 
 - no predicate, no `within`  → closed form (every non-empty ordered subset
   is a trend): count = 2^n − 1, events = n·2^(n−1), Σf = (Σ f)·2^(n−1) —
@@ -44,7 +45,6 @@ from __future__ import annotations
 from typing import Callable
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -150,13 +150,6 @@ def _greta_dp_extend(
         len_sum[i] = ls + c  # every trend ending at i gains event i
         if nf:
             val_sum[i] = vs + vals[i] * c
-
-
-def _group_arrays(pdf: pd.DataFrame, ts_col: str, value_field: str | None):
-    ts = pdf[ts_col].astype("int64").to_numpy()
-    vals = pdf[value_field].to_numpy(dtype=np.float64) if value_field else None
-    cols = {c: pdf[c].to_numpy() for c in pdf.columns}
-    return ts, vals, cols
 
 
 def trend_aggregate_multi(
@@ -313,40 +306,46 @@ def trend_aggregate_multi(
         "query string, trend_count double, event_count double, value_sum double"
     )
 
-    def run(key_tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(sort_cols, kind="mergesort")  # shared sort
+    def run(key_tuple, cols: dict) -> list:
+        # the driver's (keys, ts, order) sort is shared by every query
         rows = []
         for g in groups.values():
-            sub = pdf[pdf["event_type"] == g["etype"]] if g["etype"] else pdf
-            ts = sub[ts_col].astype("int64").to_numpy()
+            sub = cols
+            if g["etype"]:
+                m = cols["event_type"] == g["etype"]
+                sub = {c: v[m] for c, v in cols.items()}
             vals = (
-                np.column_stack([sub[f].to_numpy(dtype=np.float64) for f in g["fields"]])
+                np.column_stack(
+                    [np.asarray(sub[f], dtype=np.float64) for f in g["fields"]]
+                )
                 if g["fields"]
                 else None
             )
-            cols = {c: sub[c].to_numpy() for c in sub.columns}
             tc, ec, vs = _greta_dp(
-                ts, vals, cols, g["adjacent"], g["adjacent_vec"], g["within_ns"]
+                sub["__ts"], vals, sub, g["adjacent"], g["adjacent_vec"],
+                g["within_ns"],
             )
             for name, fi in g["members"]:
                 rows.append(
-                    list(key_tuple)
-                    + [name, tc, ec, float(vs[fi]) if fi is not None else 0.0]
+                    [*key_tuple, name, tc, ec,
+                     float(vs[fi]) if fi is not None else 0.0]
                 )
-        out_cols = list(keys) + ["query", "trend_count", "event_count", "value_sum"]
-        return pd.DataFrame(rows, columns=out_cols)
+        return rows
+
+    out_cols = list(keys) + ["query", "trend_count", "event_count", "value_sum"]
+    return _drive(df, keys, run, schema, out_cols, sort_cols)
+
+
+def _drive(df, keys, run, schema, out_cols, sort_cols) -> DataFrame:
+    from varpulis_spark.operators.partition_driver import (
+        apply_per_key,
+        apply_unpartitioned,
+    )
 
     if keys:
-        from varpulis_spark.operators.partition_driver import apply_per_key
-
-        out_cols = list(keys) + ["query", "trend_count", "event_count", "value_sum"]
         return apply_per_key(df, keys, run, schema, out_cols, sort_cols)
     _warn_single_universe()
-    return (
-        df.withColumn("__g", F.lit(0))
-        .groupBy("__g")
-        .applyInPandas(lambda k, pdf: run((), pdf.drop(columns="__g")), schema)
-    )
+    return apply_unpartitioned(df, run, schema, out_cols, sort_cols)
 
 
 def _warn_single_universe() -> None:
@@ -356,7 +355,7 @@ def _warn_single_universe() -> None:
         "unpartitioned trend aggregation: all events funnel into ONE task "
         "(a single GRETA graph, reference parity). This serializes at "
         "scale — add partition_by to distribute the DP across keys.",
-        stacklevel=4,
+        stacklevel=5,
     )
 
 
@@ -426,28 +425,16 @@ def trend_aggregate(
     if keys:
         schema = key_fields + ", " + schema
 
-    def run(key_tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(sort_cols, kind="mergesort")
-        ts, vals, cols = _group_arrays(pdf, ts_col, value_field)
-        tc, ec, vs = _greta_dp(ts, vals, cols, adjacent, adjacent_vec, within_ns)
-        row = list(key_tuple) + [tc, ec]
-        if has_value:
-            row.append(float(vs[0]))
-        out_cols = list(keys) + ["trend_count", "event_count"] + (
-            ["value_sum"] if has_value else []
+    def run(key_tuple, cols: dict) -> list:
+        vals = (
+            np.asarray(cols[value_field], dtype=np.float64) if has_value else None
         )
-        return pd.DataFrame([row], columns=out_cols)
-
-    if keys:
-        from varpulis_spark.operators.partition_driver import apply_per_key
-
-        out_cols = list(keys) + ["trend_count", "event_count"] + (
-            ["value_sum"] if has_value else []
+        tc, ec, vs = _greta_dp(
+            cols["__ts"], vals, cols, adjacent, adjacent_vec, within_ns
         )
-        return apply_per_key(df, keys, run, schema, out_cols, sort_cols)
-    _warn_single_universe()
-    return (
-        df.withColumn("__g", F.lit(0))
-        .groupBy("__g")
-        .applyInPandas(lambda k, pdf: run((), pdf.drop(columns="__g")), schema)
+        return [[*key_tuple, tc, ec] + ([float(vs[0])] if has_value else [])]
+
+    out_cols = list(keys) + ["trend_count", "event_count"] + (
+        ["value_sum"] if has_value else []
     )
+    return _drive(df, keys, run, schema, out_cols, sort_cols)

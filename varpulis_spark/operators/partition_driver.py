@@ -1,4 +1,4 @@
-"""Shared per-key pandas driver over co-located partitions.
+"""Shared per-key driver over co-located partitions, on numpy columns.
 
 Spark's `groupBy(keys).applyInPandas` slices Arrow data per GROUP — at
 10k+ keys the slicing machinery dominates Python-stateful stages, and the
@@ -8,6 +8,13 @@ keys (`spread_keys` — co-locates every key AND pins width against AQE's
 byte-based coalescing), then ONE `mapInPandas` pass per partition with a
 global (keys, sort_cols) sort and numpy boundary slicing via factorize
 codes (null keys group together, matching groupBy's null-safe grouping).
+
+Columnar contract: a partition becomes one dict of numpy column arrays
+(plus `__ts`, the event time as int64 ns, converted once per partition)
+and group bounds (`partition_columns`). `apply_per_key` hands each key
+its slices of those arrays — `run(key_tuple, cols) -> rows` — and builds
+ONE output frame per partition from the rows; no per-key pandas frame is
+built or sorted.
 
 Memory contract: one shuffle partition lives in pandas — size
 `spark.sql.shuffle.partitions` so partitions fit executors, the standard
@@ -24,28 +31,20 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 
-def collect_partition(batches) -> pd.DataFrame | None:
-    """Concatenate a mapInPandas batch iterator into one frame (None when
-    the partition is empty)."""
-    pdfs = [b for b in batches if len(b)]
-    if not pdfs:
-        return None
-    return pd.concat(pdfs) if len(pdfs) > 1 else pdfs[0]
-
-
-def sorted_key_bounds(
+def sorted_columns(
     pdf: pd.DataFrame, keys: list[str], sort_cols: list[str]
-) -> tuple[pd.DataFrame, np.ndarray]:
-    """Sort by (keys, sort_cols) — stable mergesort, so equal sort keys keep
-    input order — and return the sorted frame plus group boundary indices
-    `bounds` (group i is rows bounds[i]:bounds[i+1]).
+) -> tuple[dict[str, np.ndarray], np.ndarray]:
+    """Sort a non-empty frame by (keys, sort_cols) — stable mergesort, so
+    equal sort keys keep input order — and return its column arrays plus
+    group boundary indices `bounds` (group i is rows bounds[i]:bounds[i+1]).
+    `sort_cols[0]` is the event time; `cols["__ts"]` holds it as int64 ns.
 
     Key-change detection uses factorize codes: NaN/None map to the same
     sentinel, so all-null keys form ONE group, exactly like groupBy's
     null-safe grouping. This is THE canonical copy of that subtle logic —
-    SASE, forecast, and GRETA all drive through here (VERDICT r5 #3:
-    duplicated copies of null-key/ordering logic are how divergence bugs
-    ship)."""
+    SASE, forecast, GRETA and sequence scoring all drive through here
+    (VERDICT r5 #3: duplicated copies of null-key/ordering logic are how
+    divergence bugs ship)."""
     pdf = pdf.sort_values(list(keys) + sort_cols, kind="mergesort")
     n_rows = len(pdf)
     change = np.zeros(n_rows, dtype=bool)
@@ -54,32 +53,66 @@ def sorted_key_bounds(
         codes = pd.factorize(pdf[k], use_na_sentinel=True)[0]
         change[1:] |= codes[1:] != codes[:-1]
     bounds = np.append(np.nonzero(change)[0], n_rows)
-    return pdf, bounds
+    cols = {c: pdf[c].to_numpy() for c in pdf.columns}
+    cols["__ts"] = pdf[sort_cols[0]].astype("int64").to_numpy()
+    return cols, bounds
+
+
+def partition_columns(
+    batches, keys: list[str], sort_cols: list[str]
+) -> tuple[dict[str, np.ndarray], np.ndarray] | None:
+    """One mapInPandas partition as `sorted_columns` (None when empty)."""
+    pdfs = [b for b in batches if len(b)]
+    if not pdfs:
+        return None
+    pdf = pd.concat(pdfs) if len(pdfs) > 1 else pdfs[0]
+    return sorted_columns(pdf, keys, sort_cols)
 
 
 def apply_per_key(
     df: DataFrame,
     keys: list[str],
-    run: Callable[[tuple, pd.DataFrame], pd.DataFrame],
+    run: Callable[[tuple, dict[str, np.ndarray]], list],
     schema: str,
     out_cols: list[str],
     sort_cols: list[str],
 ) -> DataFrame:
-    """`run(key_tuple, group_pdf) -> pd.DataFrame` applied per key, driven
-    per partition. Groups arrive sorted by `sort_cols`."""
+    """`run(key_tuple, cols) -> rows` applied per key, driven per
+    partition. `cols` maps every input column (and `__ts`) to the key's
+    slice, in (sort_cols) order; rows are lists in `out_cols` order (or
+    dicts keyed by them). An empty partition yields an empty frame."""
     from varpulis_spark.operators.dedup import spread_keys
 
     def run_partition(batches):
-        pdf = collect_partition(batches)
-        if pdf is None:
-            yield pd.DataFrame(columns=out_cols)
-            return
-        pdf, bounds = sorted_key_bounds(pdf, keys, sort_cols)
-        frames = []
-        for s0, s1 in zip(bounds[:-1], bounds[1:]):
-            g = pdf.iloc[s0:s1]
-            key_tuple = tuple(g.iloc[0][k] for k in keys)
-            frames.append(run(key_tuple, g))
-        yield pd.concat(frames) if frames else pd.DataFrame(columns=out_cols)
+        part = partition_columns(batches, keys, sort_cols)
+        rows: list = []
+        if part is not None:
+            cols_all, bounds = part
+            for s0, s1 in zip(bounds[:-1], bounds[1:]):
+                g_cols = {c: v[s0:s1] for c, v in cols_all.items()}
+                key_tuple = tuple(cols_all[k][s0] for k in keys)
+                rows.extend(run(key_tuple, g_cols))
+        yield pd.DataFrame(rows, columns=out_cols)
 
     return spread_keys(df, keys).mapInPandas(run_partition, schema)
+
+
+def apply_unpartitioned(
+    df: DataFrame,
+    run: Callable[[tuple, dict[str, np.ndarray]], list],
+    schema: str,
+    out_cols: list[str],
+    sort_cols: list[str],
+) -> DataFrame:
+    """`run((), cols)` over ALL rows as one group (one task: a single
+    universe, reference parity for operators without partition keys).
+    No output row for an empty input, like groupBy."""
+    from pyspark.sql import functions as F
+
+    def run_all(_key, pdf: pd.DataFrame) -> pd.DataFrame:
+        cols, _ = sorted_columns(pdf.drop(columns="__g"), [], sort_cols)
+        return pd.DataFrame(run((), cols), columns=out_cols)
+
+    return df.withColumn("__g", F.lit(0)).groupBy("__g").applyInPandas(
+        run_all, schema
+    )

@@ -1015,56 +1015,23 @@ def apply_pattern_batch(stream, pattern: Pattern) -> DataFrame:
     schema = _out_schema(pattern, df)
     sort_cols = [ts_col] + ([order_col] if order_col else [])
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(sort_cols, kind="mergesort")
-        ts_ns = pdf[ts_col].astype("int64").to_numpy()
-        group_cols = {c: pdf[c].to_numpy() for c in pdf.columns}
-        group_cols["__ts"] = ts_ns
-        rows = _run_nfa(group_cols, ts_ns, len(pdf), pattern)
-        cols = list(pattern.emit.keys())
-        return pd.DataFrame(rows, columns=cols)
+    out_cols = list(pattern.emit.keys())
+
+    def run(_key, cols: dict) -> list[dict]:
+        return _run_nfa(cols, cols["__ts"], len(cols["__ts"]), pattern)
+
+    from varpulis_spark.operators.partition_driver import (
+        apply_per_key,
+        apply_unpartitioned,
+    )
 
     if keys:
-        from varpulis_spark.operators.dedup import spread_keys
-
-        out_cols = list(pattern.emit.keys())
-
-        from varpulis_spark.operators.partition_driver import (
-            collect_partition,
-            sorted_key_bounds,
-        )
-
-        def run_partition(batches):
-            """Per-PARTITION NFA driver: `spread_keys` hash-partitions on
-            the pattern keys, so every key's events are co-located; one
-            global (keys, ts, order) sort + numpy boundary slicing replaces
-            Spark's per-group applyInPandas machinery (measured 0.97 s →
-            0.57 s on the kleene suite at sf0.1 — per-group Arrow slicing
-            dominated, the NFA itself is ~0.26 s across tasks). Memory
-            holds one shuffle partition in pandas — on a cluster, size
-            spark.sql.shuffle.partitions so partitions fit executors, the
-            same contract as every mapInPandas op here.
-
-            Sort/boundary logic is the shared partition_driver primitives
-            (one canonical copy of the null-key/ordering subtleties); the
-            NFA consumes raw numpy slices, not per-group sub-DataFrames —
-            that slicing-cost saving is the whole point of this driver."""
-            pdf = collect_partition(batches)
-            if pdf is None:
-                yield pd.DataFrame(columns=out_cols)
-                return
-            pdf, bounds = sorted_key_bounds(pdf, keys, sort_cols)
-            ts_all = pdf[ts_col].astype("int64").to_numpy()
-            cols_all = {c: pdf[c].to_numpy() for c in pdf.columns}
-            rows: list[dict] = []
-            for s0, s1 in zip(bounds[:-1], bounds[1:]):
-                g_cols = {c: v[s0:s1] for c, v in cols_all.items()}
-                g_ts = ts_all[s0:s1]
-                g_cols["__ts"] = g_ts
-                rows.extend(_run_nfa(g_cols, g_ts, int(s1 - s0), pattern))
-            yield pd.DataFrame(rows, columns=out_cols)
-
-        return spread_keys(df, keys).mapInPandas(run_partition, schema)
+        # Per-PARTITION NFA driver: one global (keys, ts, order) sort +
+        # numpy boundary slicing replaces Spark's per-group applyInPandas
+        # machinery (measured 0.97 s → 0.57 s on the kleene suite at sf0.1
+        # — per-group Arrow slicing dominated, the NFA itself is ~0.26 s
+        # across tasks); the NFA consumes raw numpy slices.
+        return apply_per_key(df, keys, run, schema, out_cols, sort_cols)
     # single NFA universe — serial, parity with an unpartitioned reference
     # pattern; avoid on large inputs.
     import warnings
@@ -1076,8 +1043,4 @@ def apply_pattern_batch(stream, pattern: Pattern) -> DataFrame:
         "VPL `partition by` clause) to distribute matching.",
         stacklevel=3,
     )
-    return (
-        df.withColumn("__g", F.lit(0))
-        .groupBy("__g")
-        .applyInPandas(lambda _key, pdf: run(pdf.drop(columns="__g")), schema)
-    )
+    return apply_unpartitioned(df, run, schema, out_cols, sort_cols)

@@ -139,15 +139,13 @@ def score_sequence(
     out_cols = list(keys) + ["n_events", output]
     state: dict = {}
 
-    def run(key_tuple, g: pd.DataFrame) -> pd.DataFrame:
+    def run(key_tuple, cols: dict) -> list:
         if "predict" not in state:
             state["predict"] = _load_seq_model(model, runtime)  # once per worker
-        tail = g.iloc[-last_n:]
-        x3 = tail[inputs].to_numpy(dtype=np.float64)[None, :, :]
-        s = state["predict"](x3)
-        return pd.DataFrame(
-            [list(key_tuple) + [len(tail), s]], columns=out_cols
+        x = np.column_stack(
+            [np.asarray(cols[c][-last_n:], dtype=np.float64) for c in inputs]
         )
+        return [[*key_tuple, len(x), state["predict"](x[None, :, :])]]
 
     sort_cols = [ts_col] + ([order_col] if order_col else [])
     return apply_per_key(df, keys, run, schema, out_cols, sort_cols)
